@@ -500,14 +500,13 @@ def ingest(
                 sink.merge(typed, epoch, meta=meta)
             else:
                 # WAP gate: stage (no-op if a crashed prior run already
-                # staged this epoch), audit, publish-or-fail
+                # staged this epoch), then audit and publish-or-fail
                 sink.stage(typed, epoch, meta=meta)
-                report = sink.audit_staged(epoch, audit)
-                if not report["passed"]:
+                gate = sink.publish_if(epoch, audit)
+                if not gate["published"]:
                     if audit_on_fail == "discard":
                         sink.discard(epoch)
-                    raise IngestAuditError(epoch, report)
-                sink.publish(epoch)
+                    raise IngestAuditError(epoch, gate["audit"])
             done += 1
             if fail_after_epochs is not None and done >= fail_after_epochs:
                 raise RuntimeError(f"injected crash after {done} epochs (test hook)")

@@ -183,12 +183,11 @@ def route_ingest(
                     from .ingest import IngestAuditError
 
                     sinks[t].stage(typed, epoch)
-                    report = sinks[t].audit_staged(epoch, audit)
-                    if not report["passed"]:
+                    gate = sinks[t].publish_if(epoch, audit)
+                    if not gate["published"]:
                         if audit_on_fail == "discard":
                             sinks[t].discard(epoch)
-                        raise IngestAuditError(epoch, report, table=t)
-                    sinks[t].publish(epoch)
+                        raise IngestAuditError(epoch, gate["audit"], table=t)
                 merges_done += 1
                 if fail_after is not None and merges_done >= fail_after:
                     raise RuntimeError(

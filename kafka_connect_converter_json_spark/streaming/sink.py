@@ -42,6 +42,8 @@ import hashlib
 import json
 import os
 import shutil
+import threading
+from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -321,8 +323,6 @@ class BucketedMergeSink:
         op_col: str = "op",
         delete_op: str = "d",
         num_buckets: int = 64,
-        write_repartition: bool = True,
-        persist_batch: bool = False,
         prune_buckets: bool = True,
         salted_merge: bool = False,
         salt_buckets: int = 32,
@@ -332,11 +332,6 @@ class BucketedMergeSink:
         bucket_cols: list[str] | None = None,
         manifest_writer: ManifestWriter | None = None,
     ) -> None:
-        # measured on 1M events / 4 epochs / local[32] (best of 2):
-        #   repartition+persist 13.1s; repartition only 10.5s (default);
-        #   no repartition 24.0s (AQE-coalesced write skews file sizes).
-        # persist only pays when recomputing the batch is expensive
-        # (e.g. a slow upstream join); for scans/generators it loses.
         self.spark = spark
         self.root = root
         self.keys = keys
@@ -344,15 +339,14 @@ class BucketedMergeSink:
         self.op_col = op_col
         self.delete_op = delete_op
         self.num_buckets = num_buckets
-        self.write_repartition = write_repartition
-        self.persist_batch = persist_batch
-        # prune_buckets=True: discover the batch's buckets first and read/
-        # rewrite only those (the 100 TB path — epochs touch a small slice
-        # of the key space). False: skip discovery, read every live bucket,
-        # and run the stats/lineage job CONCURRENTLY with the merge on a
-        # second thread — right when batches touch most buckets anyway
-        # (uniform-update benchmarks), where discovery is pure critical-path
-        # overhead.
+        # prune_buckets (COW only — a MOR write never reads the table):
+        # True discovers the batch's buckets first (one small distinct job)
+        # and reads/rewrites only those (the 100 TB path — epochs touch a
+        # small slice of the key space). False skips discovery and reads/
+        # rewrites every live bucket — right when batches touch most
+        # buckets anyway (uniform-update benchmarks), where discovery is
+        # pure critical-path overhead. Either way the stats/lineage job
+        # overlaps the write (``_start_stats``), as on every write path.
         self.prune_buckets = prune_buckets
         # salted_merge: two-level LWW reduce inside the MERGE (N4) — for
         # pathological per-key skew (one (repo,path) receiving a large
@@ -519,189 +513,149 @@ class BucketedMergeSink:
         analogue. Survives crash/resume because it rides the manifest."""
         return dict(self._manifest.get("meta", {}))
 
-    def merge(
-        self, batch: DataFrame, epoch: int, lineage_cols: tuple[str, ...] = (),
-        meta: dict | None = None,
-    ) -> dict:
+    def merge(self, batch: DataFrame, epoch: int, meta: dict | None = None) -> dict:
         """Apply one epoch's CDC events. Idempotent on ``epoch``.
 
         ``batch`` columns: keys + order_col + op_col + payload (+ optional
         kafka_partition/kafka_offset for lineage). ``meta`` entries are
         committed into the manifest atomically with the epoch.
+
+        Merge-on-read writes the batch's LWW-reduced DELTA — the same
+        delta ``stage()`` writes — and never reads the table, so epoch
+        cost is O(batch) regardless of table size; ``read()`` merges
+        base + deltas and ``compact()`` folds them back into a base.
+        Copy-on-write rewrites the touched buckets (``_cow_rewrite``).
         """
         if epoch in self.committed_epochs():
             return {"epoch": epoch, "skipped": True}
-        self._pending_meta = meta
-
-        payload_cols = [
-            c
-            for c in batch.columns
-            if c not in self.keys
-            and c not in (self.order_col, self.op_col, "kafka_partition", "kafka_offset")
-        ]
-
-        batch = batch.select(
-            *self.keys, self.order_col, self.op_col, *payload_cols,
-            *[c for c in ("kafka_partition", "kafka_offset") if c in batch.columns],
-        )
-        merge_fn = self._merge_mor if self.merge_mode == "mor" else self._merge_persisted
-        if self.persist_batch:
-            batch = batch.persist()
-            try:
-                return merge_fn(batch, epoch, payload_cols)
-            finally:
-                batch.unpersist()
-        return merge_fn(batch, epoch, payload_cols)
-
-    def _merge_mor(self, batch: DataFrame, epoch: int, payload_cols: list[str]) -> dict:
-        """Merge-on-read epoch: LWW-reduce WITHIN the batch only (one
-        version per key per epoch; deletes kept as tombstone markers) and
-        append the result as a bucket-partitioned DELTA directory. The
-        table is never read, so epoch cost is O(batch) regardless of
-        table size; ``read()`` merges base + deltas and ``compact()``
-        folds them back into a base."""
-        batch_b = batch.withColumn("_bucket", self._bucket_expr())
-        # stats/lineage runs CONCURRENTLY with the delta write (same
-        # scheme as the COW no-prune path): the MOR write never needs the
-        # touched-bucket list — `repartition(num_buckets, _bucket)` hashes
-        # to at most the touched buckets' partitions and partitionBy only
-        # writes non-empty dirs — so blocking on the stats scan (a full
-        # pass over the batch's key/lsn columns) was pure serial time
-        # (measured: the ONLY reason the 50M replay read MOR slower than
-        # COW, whose no-prune branch already overlapped it).
-        import threading
-
-        stats_box: dict = {}
-
-        def _stats():
-            try:
-                stats_box["result"] = self._stats_pass(batch_b, epoch)
-            except Exception as e:  # noqa: BLE001
-                stats_box["error"] = e
-
-        stats_thread = threading.Thread(target=_stats, daemon=True)
-        stats_thread.start()
-
-        lww = (
-            (lambda df, k, o, p: lww_latest_salted(df, k, o, p, self.salt_buckets))
-            if self.salted_merge
-            else lww_latest
-        )
-        # op survives: an op='d' winner is the tombstone marker that masks
-        # base/earlier-delta rows at read time
-        reduced = lww(
-            batch_b, self.keys + ["_bucket"], self.order_col,
-            payload_cols + [self.op_col],
-        )
-
-        epoch_rel = f"data/e{epoch:06d}"
-        epoch_dir = os.path.join(self.root, epoch_rel)
-        if os.path.exists(epoch_dir):  # orphan from a crashed attempt
-            shutil.rmtree(epoch_dir)
-        to_write = (
-            reduced.repartition(self.num_buckets, "_bucket")
-            if self.write_repartition
-            else reduced
-        )
-        if self.sort_within_buckets:
-            to_write = to_write.sortWithinPartitions("_bucket", *self.keys)
-        to_write.write.partitionBy("_bucket").parquet(epoch_dir)
-        stats_thread.join()
-        if "error" in stats_box:
-            raise stats_box["error"]
-        lineage_stats, touched = stats_box["result"]
-
-        written = sorted(
-            f"{epoch_rel}/{d}"
-            for d in os.listdir(epoch_dir)
-            if d.startswith("_bucket=")
-        )
-        stats = {
-            "epoch": epoch,
-            "touched_buckets": len(touched),
-            "lineage": lineage_stats,
-            "buckets": dict(self._manifest["buckets"]),
-            "deltas": list(self._manifest.get("deltas", [])) + written,
-            # the bucket count THIS snapshot's layout was written under —
-            # a later rebucket() changes self.num_buckets, and changelog
-            # bucket pruning must probe with the snapshot's own count
-            "num_buckets": self.num_buckets,
-        }
-        manifest = dict(self._manifest)
-        manifest["deltas"] = stats["deltas"]
-        manifest["epochs"] = manifest["epochs"] + [stats]
-        pending = getattr(self, "_pending_meta", None)
-        if pending:
-            manifest["meta"] = {**manifest.get("meta", {}), **pending}
-            self._pending_meta = None
-        self._commit_manifest(manifest)
-        if self.compact_every is not None:
-            n_delta_epochs = len({r.split("/")[1] for r in manifest["deltas"]})
-            if n_delta_epochs >= self.compact_every:
-                # after the epoch commit (never instead of it): a crash
-                # here just leaves the deltas pending for the next trigger
-                stats = {**stats, "auto_compact": self.compact()}
-        return stats
-
-    def _merge_persisted(self, batch: DataFrame, epoch: int, payload_cols: list[str]) -> dict:
-        batch_b = batch.withColumn("_bucket", self._bucket_expr())
-        buckets_map = dict(self._manifest["buckets"])
-
-        stats_thread = None
-        stats_box: dict = {}
-        if self.prune_buckets:
-            # Only touched-bucket DISCOVERY gates the merge plan (it picks
-            # which bucket files to read — the pruning a real Iceberg
-            # MERGE gets from its partition spec), so only that tiny
-            # distinct blocks; the lineage aggregation (a wider scan over
-            # offsets/lsn) overlaps the merge on a second thread like the
-            # other paths. Lineage still lands BEFORE the manifest flips,
-            # so a committed epoch always has it.
-            import threading
-
-            def _stats():
-                try:
-                    stats_box["result"] = self._stats_pass(batch_b, epoch)
-                except Exception as e:  # noqa: BLE001
-                    stats_box["error"] = e
-
-            stats_thread = threading.Thread(target=_stats, daemon=True)
-            stats_thread.start()
-            touched = sorted(
-                r["_bucket"]
-                for r in batch_b.select("_bucket").distinct().collect()
+        batch_b = self._bucketed_batch(batch)
+        stats = self._start_stats(batch_b, epoch)
+        rel = f"data/e{epoch:06d}"
+        if self.merge_mode == "mor":
+            written = self._write_buckets(
+                self._lww(batch_b, self.salted_merge), rel, self.num_buckets
             )
-            current_paths = [
-                os.path.join(self.root, buckets_map[str(b)])
-                for b in touched
-                if str(b) in buckets_map
-            ]
+            lineage, touched = stats()
+            return self._commit_epoch(
+                epoch, touched, lineage, meta, deltas=sorted(written.values())
+            )
+        if self.prune_buckets:
+            # only this tiny distinct blocks the rewrite: it picks which
+            # bucket files to read — the pruning a real Iceberg MERGE gets
+            # from its partition spec
+            read = sorted(
+                r["_bucket"] for r in batch_b.select("_bucket").distinct().collect()
+            )
+            n_parts = max(1, len(read))
         else:
-            # no pruning: merge reads every live bucket; stats/lineage job
-            # runs concurrently off the critical path (Spark schedules
-            # concurrent jobs from separate threads)
-            import threading
+            read = sorted(int(b) for b in self._manifest["buckets"])
+            n_parts = self.num_buckets
+        buckets = self._cow_rewrite(batch_b, read, rel, n_parts, self.salted_merge)
+        lineage, touched = stats()
+        return self._commit_epoch(epoch, touched, lineage, meta, buckets=buckets)
 
-            def _stats():
-                try:
-                    stats_box["result"] = self._stats_pass(batch_b, epoch)
-                except Exception as e:  # noqa: BLE001
-                    stats_box["error"] = e
+    def _payload_cols(self, columns: list[str]) -> list[str]:
+        reserved = (self.order_col, self.op_col, "_bucket", "kafka_partition",
+                    "kafka_offset")
+        return [c for c in columns if c not in self.keys and c not in reserved]
 
-            stats_thread = threading.Thread(target=_stats, daemon=True)
-            stats_thread.start()
-            touched = sorted(int(b) for b in buckets_map)
-            current_paths = [os.path.join(self.root, rel) for rel in buckets_map.values()]
+    def _bucketed_batch(self, batch: DataFrame) -> DataFrame:
+        """The batch in merge-contract column order, plus ``_bucket``."""
+        lineage = [c for c in ("kafka_partition", "kafka_offset") if c in batch.columns]
+        return batch.select(
+            *self.keys, self.order_col, self.op_col,
+            *self._payload_cols(batch.columns), *lineage,
+        ).withColumn("_bucket", self._bucket_expr())
 
-        cols = [*self.keys, self.order_col, self.op_col, *payload_cols, "_bucket"]
-        sides = batch_b.select(*cols)
-        if current_paths:
+    def _lww(self, df: DataFrame, salted: bool) -> DataFrame:
+        """One version per (keys, _bucket), ``op_col`` kept: an op='d'
+        winner is the tombstone marker that masks base/earlier-delta rows
+        at read time. ``salted`` adds the two-level reduce for hot keys."""
+        keys, payload = self.keys + ["_bucket"], self._payload_cols(df.columns)
+        if salted:
+            return lww_latest_salted(df, keys, self.order_col,
+                                     payload + [self.op_col], self.salt_buckets)
+        return lww_latest(df, keys, self.order_col, payload + [self.op_col])
+
+    def _start_stats(
+        self, batch_b: DataFrame, epoch: int, write_lineage: bool = True
+    ) -> Callable[[], tuple[list[dict], list[int]]]:
+        """Start ``_stats_pass`` on a second thread so the stats/lineage
+        job overlaps the data write (Spark schedules concurrent jobs from
+        separate threads). Returns a join callable that yields
+        ``(lineage, touched)`` or re-raises the thread's error. Lineage
+        still lands BEFORE the manifest flips, so a committed epoch
+        always has it. No write waits on this pass: a delta write needs
+        no touched-bucket list, and a pruned COW rewrite discovers its
+        buckets with a much smaller distinct job. Blocking on it (a full
+        pass over the batch's key/lsn columns) was measured as the only
+        reason a 50M-event MOR replay ran slower than COW."""
+        box: dict = {}
+
+        def _run():
+            try:
+                box["result"] = self._stats_pass(batch_b, epoch, write_lineage)
+            except Exception as e:  # noqa: BLE001
+                box["error"] = e
+
+        thread = threading.Thread(target=_run, daemon=True)
+        thread.start()
+
+        def join():
+            thread.join()
+            if "error" in box:
+                raise box["error"]
+            return box["result"]
+
+        return join
+
+    def _write_buckets(
+        self, df: DataFrame, rel: str, n_parts: int, sort: bool = True
+    ) -> dict[str, str]:
+        """Write ``df`` (with ``_bucket``) bucket-partitioned under
+        ``rel``; returns ``{bucket: dir}`` for the non-empty buckets
+        written. ``sort`` honours ``sort_within_buckets``.
+
+        Hash-partitioning on ``_bucket`` first gives one file per bucket
+        dir. Measured on 1M events / 4 epochs / local[32] (best of 2):
+        10.5 s with the repartition, 24.0 s without (the AQE-coalesced
+        write skews file sizes)."""
+        out_dir = os.path.join(self.root, rel)
+        if os.path.exists(out_dir):  # orphan from a crashed attempt
+            shutil.rmtree(out_dir)
+        to_write = df.repartition(n_parts, "_bucket")
+        if sort and self.sort_within_buckets:
+            to_write = to_write.sortWithinPartitions("_bucket", *self.keys)
+        to_write.write.partitionBy("_bucket").parquet(out_dir)
+        return {
+            d.split("=", 1)[1]: f"{rel}/{d}"
+            for d in os.listdir(out_dir)
+            if d.startswith("_bucket=")
+        }
+
+    def _cow_rewrite(
+        self, delta_b: DataFrame, read: list[int], rel: str, n_parts: int,
+        salted: bool = False,
+    ) -> dict[str, str]:
+        """Copy-on-write: LWW ``delta_b`` (keys + order + op + payload +
+        ``_bucket``) against the live files of buckets ``read``, drop
+        deletes and write the survivors under ``rel`` in one wide shuffle.
+        Returns the new bucket map: the ``read`` buckets are replaced by
+        what was written (a bucket whose rows were all deleted vanishes);
+        every other bucket keeps its files."""
+        buckets = dict(self._manifest["buckets"])
+        cols = [*self.keys, self.order_col, self.op_col,
+                *self._payload_cols(delta_b.columns), "_bucket"]
+        sides = delta_b.select(*cols)
+        live = [buckets.pop(str(b)) for b in read if str(b) in buckets]
+        if live:
             # mergeSchema + allowMissingColumns: bucket files written before
             # a schema evolution lack the new columns; they read back as
             # null (additive-widening contract, SURVEY.md N2 / Iceberg
             # ADD COLUMN semantics)
             cur = (
-                self.spark.read.option("mergeSchema", "true").parquet(*current_paths)
+                self.spark.read.option("mergeSchema", "true")
+                .parquet(*[os.path.join(self.root, r) for r in live])
                 .withColumn(self.op_col, F.lit("u"))
                 .withColumn("_bucket", self._bucket_expr())
             )
@@ -709,73 +663,56 @@ class BucketedMergeSink:
                 cur.select(*[c for c in cols if c in cur.columns]),
                 allowMissingColumns=True,
             )
-
-        # single wide shuffle: LWW over (keys, bucket) with map-side combine
-        # (salted variant adds a second, tiny reduce for hot-key skew)
-        lww = (
-            (lambda df, k, o, p: lww_latest_salted(df, k, o, p, self.salt_buckets))
-            if self.salted_merge
-            else lww_latest
-        )
         merged = (
-            lww(sides, self.keys + ["_bucket"], self.order_col, payload_cols + [self.op_col])
+            self._lww(sides, salted)
             .filter(F.col(self.op_col) != self.delete_op)
             .drop(self.op_col)
         )
+        return {**buckets, **self._write_buckets(merged, rel, n_parts)}
 
-        epoch_rel = f"data/e{epoch:06d}"
-        epoch_dir = os.path.join(self.root, epoch_rel)
-        if os.path.exists(epoch_dir):  # orphan from a crashed attempt
-            shutil.rmtree(epoch_dir)
-        n_parts = max(1, len(touched)) if self.prune_buckets else self.num_buckets
-        to_write = (
-            merged.repartition(n_parts, "_bucket")
-            if self.write_repartition
-            else merged  # AQE-coalesced shuffle output; more files per bucket
-        )
-        if self.sort_within_buckets:
-            to_write = to_write.sortWithinPartitions("_bucket", *self.keys)
-        to_write.write.partitionBy("_bucket").parquet(epoch_dir)
-
-        # buckets that still exist after the merge (all-deleted buckets vanish)
-        written = {
-            int(d.split("=", 1)[1]): f"{epoch_rel}/{d}"
-            for d in os.listdir(epoch_dir)
-            if d.startswith("_bucket=")
-        }
-        if self.prune_buckets:
-            for b in touched:
-                if b in written:
-                    buckets_map[str(b)] = written[b]
-                else:
-                    buckets_map.pop(str(b), None)
-        else:
-            # every live bucket was read and rewritten: the written set IS
-            # the new table (absent bucket = fully deleted)
-            buckets_map = {str(b): rel for b, rel in written.items()}
-        stats_thread.join()
-        if "error" in stats_box:
-            raise stats_box["error"]
-        lineage_stats, _ = stats_box["result"]
-
-        stats = {
+    def _commit_epoch(
+        self, epoch: int, touched: list[int], lineage: list[dict],
+        meta: dict | None = None, buckets: dict | None = None,
+        deltas: Sequence[str] = (),
+    ) -> dict:
+        """The one commit point of every merge and publish: append the
+        epoch's snapshot entry, merge ``meta``, drop the epoch's staged
+        entry, CAS the manifest, then auto-compact. ``buckets`` replaces
+        the bucket map (COW); ``deltas`` join the pending deltas (MOR).
+        Returns the snapshot entry."""
+        manifest = dict(self._manifest)
+        if buckets is not None:
+            manifest["buckets"] = buckets
+        manifest["deltas"] = list(manifest.get("deltas", [])) + list(deltas)
+        entry = {
             "epoch": epoch,
             "touched_buckets": len(touched),
-            "lineage": lineage_stats,
-            # snapshot: the full bucket map as of this epoch — enables
-            # time travel (read_as_of) exactly like an Iceberg snapshot
-            "buckets": buckets_map,
+            "lineage": lineage,
+            # snapshot: the full bucket map and pending deltas as of this
+            # epoch — enables time travel (read_as_of) exactly like an
+            # Iceberg snapshot
+            "buckets": dict(manifest["buckets"]),
+            "deltas": list(manifest["deltas"]),
+            # the bucket count THIS snapshot's layout was written under —
+            # a later rebucket() changes self.num_buckets, and changelog
+            # bucket pruning must probe with the snapshot's own count
             "num_buckets": self.num_buckets,
         }
-        manifest = dict(self._manifest)
-        manifest["buckets"] = buckets_map
-        manifest["epochs"] = manifest["epochs"] + [stats]
-        pending = getattr(self, "_pending_meta", None)
-        if pending:
-            manifest["meta"] = {**manifest.get("meta", {}), **pending}
-            self._pending_meta = None
+        manifest["epochs"] = manifest["epochs"] + [entry]
+        if meta:
+            manifest["meta"] = {**manifest.get("meta", {}), **meta}
+        if str(epoch) in manifest.get("staged", {}):
+            manifest["staged"] = {
+                e: v for e, v in manifest["staged"].items() if e != str(epoch)
+            }
         self._commit_manifest(manifest)
-        return stats
+        if self.compact_every is not None:
+            n_delta_epochs = len({r.split("/")[1] for r in manifest["deltas"]})
+            if n_delta_epochs >= self.compact_every:
+                # after the epoch commit (never instead of it): a crash
+                # here just leaves the deltas pending for the next trigger
+                return {**entry, "auto_compact": self.compact()}
+        return entry
 
     def _stats_pass(
         self, batch_b: DataFrame, epoch: int, write_lineage: bool = True
@@ -1218,11 +1155,14 @@ class BucketedMergeSink:
         current = self.read()  # the merged view — already tombstone-free
         seq = len(self._manifest.get("maintenance", []))
         rel_dir = f"data/c{seq:06d}"
-        out_dir = os.path.join(self.root, rel_dir)
-        if os.path.exists(out_dir):  # orphan from a crashed attempt
-            shutil.rmtree(out_dir)
         bucketed = current.withColumn("_bucket", self._bucket_expr())
-        if zorder is not None:
+        if zorder is None:
+            new_map = self._write_buckets(bucketed, rel_dir, self.num_buckets,
+                                          sort=False)
+        else:
+            out_dir = os.path.join(self.root, rel_dir)
+            if os.path.exists(out_dir):  # orphan from a crashed attempt
+                shutil.rmtree(out_dir)
             to_write = self._zorder_clustered(current, bucketed, zorder,
                                               files_per_bucket)
             # one file per (bucket, slice): each written file is a
@@ -1232,14 +1172,11 @@ class BucketedMergeSink:
             # renames on the driver — bounded, no data pass).
             to_write.write.partitionBy("_bucket", "_slice").parquet(out_dir)
             self._flatten_slice_dirs(out_dir)
-        else:
-            to_write = bucketed.repartition(self.num_buckets, "_bucket")
-            to_write.write.partitionBy("_bucket").parquet(out_dir)
-        new_map = {
-            d.split("=", 1)[1]: f"{rel_dir}/{d}"
-            for d in os.listdir(out_dir)
-            if d.startswith("_bucket=")
-        }
+            new_map = {
+                d.split("=", 1)[1]: f"{rel_dir}/{d}"
+                for d in os.listdir(out_dir)
+                if d.startswith("_bucket=")
+            }
         manifest = dict(self._manifest)
         manifest["buckets"] = new_map
         manifest["deltas"] = []
@@ -1462,74 +1399,20 @@ class BucketedMergeSink:
             return {"epoch": epoch, "skipped": True, "reason": "already committed"}
         if epoch in self.staged_epochs():
             return {"epoch": epoch, "skipped": True, "reason": "already staged"}
-        has_lineage = "kafka_partition" in batch.columns
-        payload_cols = [
-            c
-            for c in batch.columns
-            if c not in self.keys
-            and c not in (self.order_col, self.op_col, "kafka_partition", "kafka_offset")
-        ]
-        batch = batch.select(
-            *self.keys, self.order_col, self.op_col, *payload_cols,
-            *[c for c in ("kafka_partition", "kafka_offset") if c in batch.columns],
-        )
-        batch_b = batch.withColumn("_bucket", self._bucket_expr())
-
-        import threading
-
-        stats_box: dict = {}
-
-        def _stats():
-            try:
-                stats_box["result"] = self._stats_pass(
-                    batch_b, epoch, write_lineage=False
-                )
-            except Exception as e:  # noqa: BLE001
-                stats_box["error"] = e
-
-        stats_thread = threading.Thread(target=_stats, daemon=True)
-        stats_thread.start()
-
-        lww = (
-            (lambda df, k, o, p: lww_latest_salted(df, k, o, p, self.salt_buckets))
-            if self.salted_merge
-            else lww_latest
-        )
-        reduced = lww(
-            batch_b, self.keys + ["_bucket"], self.order_col,
-            payload_cols + [self.op_col],
-        )
-        staged_rel = f"staged/e{epoch:06d}"
-        staged_dir = os.path.join(self.root, staged_rel)
-        if os.path.exists(staged_dir):  # orphan from a crashed attempt
-            shutil.rmtree(staged_dir)
-        to_write = (
-            reduced.repartition(self.num_buckets, "_bucket")
-            if self.write_repartition
-            else reduced
-        )
-        if self.sort_within_buckets:
-            to_write = to_write.sortWithinPartitions("_bucket", *self.keys)
-        to_write.write.partitionBy("_bucket").parquet(staged_dir)
-        stats_thread.join()
-        if "error" in stats_box:
-            raise stats_box["error"]
-        lineage_stats, touched = stats_box["result"]
-
-        written = sorted(
-            f"{staged_rel}/{d}"
-            for d in os.listdir(staged_dir)
-            if d.startswith("_bucket=")
-        )
+        batch_b = self._bucketed_batch(batch)
+        stats = self._start_stats(batch_b, epoch, write_lineage=False)
+        reduced = self._lww(batch_b, self.salted_merge)
+        written = self._write_buckets(reduced, f"staged/e{epoch:06d}", self.num_buckets)
+        lineage, touched = stats()
         entry = {
             "epoch": epoch,
             "touched": touched,
-            "lineage": lineage_stats,
-            "has_lineage": has_lineage,
-            "delta_rels": written,
+            "lineage": lineage,
+            "has_lineage": "kafka_partition" in batch_b.columns,
+            "delta_rels": sorted(written.values()),
             # staged schema: an EMPTY epoch writes no part files, so the
             # delta frame must be reconstructible from metadata alone
-            "schema": to_write.schema.json(),
+            "schema": reduced.schema.json(),
             # the bucket count the staged layout was written under:
             # publish refuses if a rebucket() intervened
             "num_buckets": self.num_buckets,
@@ -1768,8 +1651,7 @@ class BucketedMergeSink:
         interleaving: the delta is LWW-reduced and LWW is idempotent /
         order-insensitive on ``order_col``). The epoch's lineage file is
         written only now, so discarded epochs never pollute lineage."""
-        staged_rel = f"staged/e{epoch:06d}"
-        staged_dir = os.path.join(self.root, staged_rel)
+        staged_dir = os.path.join(self.root, f"staged/e{epoch:06d}")
         if epoch in self.committed_epochs():
             # redelivery after a successful publish: clean any leftovers
             if str(epoch) in self._manifest.get("staged", {}):
@@ -1788,156 +1670,43 @@ class BucketedMergeSink:
                 f"{entry['num_buckets']} but the sink has since been "
                 f"rebucketed to {self.num_buckets}; discard() and re-stage"
             )
+        epoch_rel = f"data/e{epoch:06d}"
+        epoch_dir = os.path.join(self.root, epoch_rel)
+        # MOR only: a crash between the staged-dir rename and the manifest
+        # commit leaves the data already under data/ — just finish it
+        renamed = self.merge_mode == "mor" and os.path.exists(epoch_dir)
+        if not os.path.exists(staged_dir) and not renamed:
+            raise RuntimeError(
+                f"staged data for epoch {epoch} is missing on disk "
+                f"({staged_dir}); discard() and re-stage"
+            )
+        buckets, deltas = None, []
         if self.merge_mode == "mor":
-            return self._publish_mor(epoch, entry, staged_dir)
-        return self._publish_cow(epoch, entry, staged_dir)
-
-    def _publish_mor(self, epoch: int, entry: dict, staged_dir: str) -> dict:
-        epoch_rel = f"data/e{epoch:06d}"
-        epoch_dir = os.path.join(self.root, epoch_rel)
-        if os.path.exists(staged_dir):
-            if os.path.exists(epoch_dir):  # orphan from a crashed merge()
-                shutil.rmtree(epoch_dir)
-            os.makedirs(os.path.dirname(epoch_dir), exist_ok=True)
-            os.replace(staged_dir, epoch_dir)  # atomic dir rename
-        elif not os.path.exists(epoch_dir):
-            raise RuntimeError(
-                f"staged data for epoch {epoch} is missing on disk "
-                f"({staged_dir}); discard() and re-stage"
+            if os.path.exists(staged_dir):
+                if os.path.exists(epoch_dir):  # orphan from a crashed merge()
+                    shutil.rmtree(epoch_dir)
+                os.makedirs(os.path.dirname(epoch_dir), exist_ok=True)
+                os.replace(staged_dir, epoch_dir)  # atomic dir rename
+            deltas = [r.replace("staged/", "data/", 1) for r in entry["delta_rels"]]
+        elif entry["delta_rels"]:
+            # the staged delta IS a valid merge batch (keys + order + op +
+            # payload; already one version per key — LWW is idempotent).
+            # An empty epoch (quiet LSN window) keeps the bucket map.
+            touched = entry["touched"]
+            buckets = self._cow_rewrite(
+                self.spark.read.parquet(staged_dir),  # _bucket from layout
+                touched, epoch_rel, max(1, len(touched)),
             )
-        # else: crash landed between the rename and the manifest commit —
-        # the data already sits under data/, just finish the commit
-        written = [r.replace("staged/", "data/", 1) for r in entry["delta_rels"]]
         if entry["has_lineage"]:
             self._write_lineage_rows(entry["lineage"], epoch)
-        stats = {
-            "epoch": epoch,
-            "touched_buckets": len(entry["touched"]),
-            "lineage": entry["lineage"],
-            "buckets": dict(self._manifest["buckets"]),
-            "deltas": list(self._manifest.get("deltas", [])) + written,
-            "num_buckets": self.num_buckets,
-        }
-        manifest = dict(self._manifest)
-        manifest["deltas"] = stats["deltas"]
-        manifest["epochs"] = manifest["epochs"] + [stats]
-        if entry["meta"]:
-            manifest["meta"] = {**manifest.get("meta", {}), **entry["meta"]}
-        staged = dict(manifest.get("staged", {}))
-        staged.pop(str(epoch), None)
-        manifest["staged"] = staged
-        self._commit_manifest(manifest)
-        result = {**stats, "published": True}
-        if self.compact_every is not None:
-            n_delta_epochs = len({r.split("/")[1] for r in manifest["deltas"]})
-            if n_delta_epochs >= self.compact_every:
-                result = {**result, "auto_compact": self.compact()}
-        return result
-
-    def _publish_cow(self, epoch: int, entry: dict, staged_dir: str) -> dict:
-        if not os.path.exists(staged_dir):
-            raise RuntimeError(
-                f"staged data for epoch {epoch} is missing on disk "
-                f"({staged_dir}); discard() and re-stage"
-            )
-        if not entry["delta_rels"]:
-            # empty epoch (quiet LSN window): commit the snapshot with the
-            # bucket map unchanged — no data pass, mirror of an empty merge
-            if entry["has_lineage"]:
-                self._write_lineage_rows(entry["lineage"], epoch)
-            stats = {
-                "epoch": epoch,
-                "touched_buckets": 0,
-                "lineage": entry["lineage"],
-                "buckets": dict(self._manifest["buckets"]),
-                "deltas": list(self._manifest.get("deltas", [])),
-                "num_buckets": self.num_buckets,
-            }
-            manifest = dict(self._manifest)
-            manifest["epochs"] = manifest["epochs"] + [stats]
-            if entry["meta"]:
-                manifest["meta"] = {**manifest.get("meta", {}), **entry["meta"]}
-            staged = dict(manifest.get("staged", {}))
-            staged.pop(str(epoch), None)
-            manifest["staged"] = staged
-            self._commit_manifest(manifest)
+        result = self._commit_epoch(
+            epoch, entry["touched"], entry["lineage"], entry["meta"],
+            buckets=buckets, deltas=deltas,
+        )
+        if self.merge_mode == "cow":
+            # crash before this: vacuum() collects the staged dir
             shutil.rmtree(staged_dir, ignore_errors=True)
-            return {**stats, "published": True}
-        # the staged delta IS a valid merge batch (keys + order + op +
-        # payload; already one version per key — LWW is idempotent)
-        batch_b = self.spark.read.parquet(staged_dir)  # _bucket from layout
-        payload_cols = [
-            c for c in batch_b.columns
-            if c not in self.keys
-            and c not in (self.order_col, self.op_col, "_bucket")
-        ]
-        buckets_map = dict(self._manifest["buckets"])
-        touched = list(entry["touched"])
-        current_paths = [
-            os.path.join(self.root, buckets_map[str(b)])
-            for b in touched
-            if str(b) in buckets_map
-        ]
-        cols = [*self.keys, self.order_col, self.op_col, *payload_cols, "_bucket"]
-        sides = batch_b.select(*cols)
-        if current_paths:
-            cur = (
-                self.spark.read.option("mergeSchema", "true").parquet(*current_paths)
-                .withColumn(self.op_col, F.lit("u"))
-                .withColumn("_bucket", self._bucket_expr())
-            )
-            sides = sides.unionByName(
-                cur.select(*[c for c in cols if c in cur.columns]),
-                allowMissingColumns=True,
-            )
-        merged = (
-            lww_latest(sides, self.keys + ["_bucket"], self.order_col,
-                       payload_cols + [self.op_col])
-            .filter(F.col(self.op_col) != self.delete_op)
-            .drop(self.op_col)
-        )
-        epoch_rel = f"data/e{epoch:06d}"
-        epoch_dir = os.path.join(self.root, epoch_rel)
-        if os.path.exists(epoch_dir):  # orphan from a crashed attempt
-            shutil.rmtree(epoch_dir)
-        to_write = (
-            merged.repartition(max(1, len(touched)), "_bucket")
-            if self.write_repartition
-            else merged
-        )
-        if self.sort_within_buckets:
-            to_write = to_write.sortWithinPartitions("_bucket", *self.keys)
-        to_write.write.partitionBy("_bucket").parquet(epoch_dir)
-        written = {
-            int(d.split("=", 1)[1]): f"{epoch_rel}/{d}"
-            for d in os.listdir(epoch_dir)
-            if d.startswith("_bucket=")
-        }
-        for b in touched:
-            if b in written:
-                buckets_map[str(b)] = written[b]
-            else:  # bucket fully deleted by this epoch
-                buckets_map.pop(str(b), None)
-        if entry["has_lineage"]:
-            self._write_lineage_rows(entry["lineage"], epoch)
-        stats = {
-            "epoch": epoch,
-            "touched_buckets": len(touched),
-            "lineage": entry["lineage"],
-            "buckets": buckets_map,
-            "num_buckets": self.num_buckets,
-        }
-        manifest = dict(self._manifest)
-        manifest["buckets"] = buckets_map
-        manifest["epochs"] = manifest["epochs"] + [stats]
-        if entry["meta"]:
-            manifest["meta"] = {**manifest.get("meta", {}), **entry["meta"]}
-        staged = dict(manifest.get("staged", {}))
-        staged.pop(str(epoch), None)
-        manifest["staged"] = staged
-        self._commit_manifest(manifest)
-        shutil.rmtree(staged_dir)  # crash before this: vacuum() collects
-        return {**stats, "published": True}
+        return {**result, "published": True}
 
     def discard(self, epoch: int) -> dict:
         """Drop a staged epoch (failed audit / abandoned attempt). The
@@ -2869,26 +2638,15 @@ class BucketedMergeSink:
         instead of being silently overwritten."""
         if new_num_buckets == self.num_buckets:
             return {"rebucketed": False, "num_buckets": self.num_buckets}
-        current = self.read()
         seq = len(self._manifest.get("maintenance", []))
         rel_dir = f"data/m{seq:06d}"
-        out_dir = os.path.join(self.root, rel_dir)
-        if os.path.exists(out_dir):  # orphan from a crashed attempt
-            shutil.rmtree(out_dir)
         bucket = F.pmod(
             F.xxhash64(*[F.col(k) for k in self.bucket_cols]), F.lit(new_num_buckets)
         )
-        (
-            current.withColumn("_bucket", bucket)
-            .repartition(new_num_buckets, "_bucket")
-            .write.partitionBy("_bucket")
-            .parquet(out_dir)
+        new_map = self._write_buckets(
+            self.read().withColumn("_bucket", bucket), rel_dir, new_num_buckets,
+            sort=False,
         )
-        new_map = {
-            d.split("=", 1)[1]: f"{rel_dir}/{d}"
-            for d in os.listdir(out_dir)
-            if d.startswith("_bucket=")
-        }
         manifest = dict(self._manifest)
         manifest["buckets"] = new_map
         manifest["num_buckets"] = new_num_buckets

@@ -106,11 +106,13 @@ def test_idempotent_epoch_redelivery(spark, events, oracle, tmp_path):
 
 
 def test_noprune_mode_identical_state_and_lineage(spark, events, oracle, tmp_path):
-    """prune_buckets=False (concurrent stats, full-bucket merge) must be
-    byte-identical to the pruned path, including lineage totals."""
+    """prune_buckets=False (full-bucket COW merge, no bucket discovery)
+    must be byte-identical to the pruned path, including lineage totals.
+    Copy-on-write explicitly: MOR never reads the table on write, so it
+    ignores prune_buckets."""
     sink = ingest(
         spark, events, str(tmp_path / "tbl_noprune"), N_EVENTS, n_epochs=3,
-        num_buckets=8, prune_buckets=False,
+        num_buckets=8, prune_buckets=False, merge_mode="cow",
     )
     assert _state_hash(_read_state(sink)) == _state_hash(oracle)
     lin = sink.read_lineage().toPandas()

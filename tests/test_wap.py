@@ -41,20 +41,31 @@ def _mk_batch(spark, ids, lsn0, op="u", n_repos=5, score_of=None):
     )
 
 
-def _sink(spark, root, mode):
+def _sink(spark, root, mode, **kwargs):
     return BucketedMergeSink(
         spark, str(root), keys=["repo", "path"], num_buckets=4,
-        merge_mode=mode, compact_every=None,
+        merge_mode=mode, compact_every=None, **kwargs,
     )
 
 
-@pytest.mark.parametrize("mode", ["mor", "cow"])
-def test_stage_invisible_then_publish_matches_merge_twin(spark, tmp_path, mode):
+@pytest.mark.parametrize(
+    "mode,twin_kwargs",
+    [
+        pytest.param("mor", {}, id="mor"),
+        pytest.param("cow", {}, id="cow"),
+        pytest.param("cow", {"prune_buckets": False}, id="cow-noprune"),
+    ],
+)
+def test_stage_invisible_then_publish_matches_merge_twin(
+    spark, tmp_path, mode, twin_kwargs
+):
     """Three epochs (update/insert/delete mix) through stage+publish must
     land byte-identical to the same stream through plain merge(), and a
-    staged-but-unpublished epoch must be invisible to every reader."""
+    staged-but-unpublished epoch must be invisible to every reader. The
+    snapshot history (touched buckets, base files, deltas) must match too,
+    whichever bucket-discovery mode the merge twin uses."""
     wap = _sink(spark, tmp_path / "wap", mode)
-    twin = _sink(spark, tmp_path / "twin", mode)
+    twin = _sink(spark, tmp_path / "twin", mode, **twin_kwargs)
     b1 = _mk_batch(spark, range(60), 0)
     b2 = _mk_batch(spark, range(30, 90), 100)                     # overlap = updates
     b3 = _mk_batch(spark, range(0, 20), 200, op="d")              # deletes
@@ -77,6 +88,7 @@ def test_stage_invisible_then_publish_matches_merge_twin(spark, tmp_path, mode):
     assert wap.committed_epochs() == twin.committed_epochs()
     # lineage written at publish time matches the merge twin's
     assert _rows(wap.read_lineage()) == _rows(twin.read_lineage())
+    assert _rows(wap.history()) == _rows(twin.history())
 
 
 @pytest.mark.parametrize("mode", ["mor", "cow"])
