@@ -58,10 +58,10 @@ def main() -> None:
         samples = []
         for _ in range(0 if args.plan_only else args.repeats):
             spark.sparkContext.setJobDescription(f"bench_extra:{name}")
-            t0 = time.time()
+            t0 = time.perf_counter()
             df = fn(spark, args.sf)
             df.write.format("noop").mode("overwrite").save()
-            samples.append(round(time.time() - t0, 3))
+            samples.append(round(time.perf_counter() - t0, 3))
         spark.sparkContext.setJobDescription(None)
         times[name] = samples or [0.0]
         samples = times[name]

@@ -484,16 +484,19 @@ def simhash(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id", bits: int = 64,
     token_hash: str = "md5",
 ) -> DataFrame:
-    """64-bit SimHash per doc: bit b of the result is the majority vote of
-    bit b of the per-token hash across tokens. One groupBy over exploded
-    tokens; the 64 conditional sums stay in one whole-stage-codegen'd
-    aggregate.
+    """``bits``-bit SimHash per doc (1 <= ``bits`` <= 64, default 64): bit
+    b of the result is the majority vote of bit b of the per-token 64-bit
+    hash across tokens, for b < ``bits``; higher bits are 0. One groupBy
+    over exploded tokens; the ``bits`` conditional sums stay in one
+    whole-stage-codegen'd aggregate.
 
     ``token_hash="md5"`` (default) derives the 64-bit token hash from the
     first 16 hex chars of md5 via ``conv(_, 16, -10)`` — reproducible in
     any engine with md5 (the DuckDB oracle runs the identical formula).
     ``"xxhash64"`` is the cheaper JVM-intrinsic variant for production
     runs that don't need cross-engine reproducibility."""
+    if not 1 <= bits <= 64:
+        raise ValueError(f"bits must be in 1..64, got {bits!r}")
     if token_hash == "md5":
         h = F.conv(F.substring(F.md5("tok"), 1, 16), 16, -10).cast("long")
     elif token_hash == "xxhash64":

@@ -63,57 +63,49 @@ def default_config() -> ConverterConfig:
 
 
 def infer_envelope_schema_from_sample(spark: SparkSession, sample_json: str) -> T.StructType:
-    """One envelope string -> StructType (driver-side compile step)."""
-    ddl = spark.range(1).select(
-        F.schema_of_json(F.lit(sample_json)).alias("s")
-    ).collect()[0]["s"]
-    dt = T._parse_datatype_string(ddl)
-    if not isinstance(dt, T.StructType):
-        raise ValueError(f"envelope root must be a struct, got {ddl}")
-    return dt
+    """One envelope string -> StructType (driver-side compile step, no
+    Spark job)."""
+    inferred = infer_envelope_schemas_batch(spark, [sample_json])
+    if not inferred:
+        raise ValueError(f"envelope root must be a parseable JSON object: {sample_json[:80]!r}")
+    return inferred[0]
 
 
 def infer_envelope_schemas_batch(
     spark: SparkSession, samples: list[str]
 ) -> list[T.StructType]:
-    """All samples' schemas in ONE Spark job: a single ``range(1)`` row
-    computes ``schema_of_json`` per sample as columns. The per-sample
-    form costs one driver round-trip EACH (up to 6/epoch) — pure serial
-    time that Amdahl charges against scaling efficiency on small
-    executors counts; batching makes it one round-trip per epoch.
-    Unparseable samples yield no entry (same skip semantics as the
-    caller's old try/except)."""
+    """Every sample's envelope schema from one projection over a
+    driver-local one-row relation (``VALUES (1)``): ``schema_of_json`` of
+    a literal folds at plan time, so the collect launches no Spark job —
+    inference costs driver time only, however many samples an epoch
+    observes. A sample that is not JSON fails the whole projection; each
+    sample is then evaluated alone (still no job) and the failing ones
+    are skipped, as are samples whose root is not an object."""
     if not samples:
         return []
+    local = spark.sql("VALUES (1)")
+
+    def _ddls(batch: list[str]) -> list[str]:
+        cols = [F.schema_of_json(F.lit(s)).alias(f"_s{i}") for i, s in enumerate(batch)]
+        return list(local.select(*cols).collect()[0])
+
     try:
-        row = spark.range(1).select(
-            *[F.schema_of_json(F.lit(s)).alias(f"_s{i}") for i in range(len(samples))]
-        ).collect()[0]
-        ddls = list(row)
-    except Exception:  # noqa: BLE001 — a corrupt sample fails the whole
-        # batched job; fall back to per-sample jobs so good samples
-        # still observe (the rare path — corrupt envelopes are already
-        # filtered to the quarantine channel before they win a sample)
+        ddls = _ddls(samples)
+    except Exception:  # noqa: BLE001 — a corrupt sample: isolate it
         ddls = []
         for s in samples:
             try:
-                ddls.append(
-                    spark.range(1)
-                    .select(F.schema_of_json(F.lit(s)).alias("s"))
-                    .collect()[0][0]
-                )
+                ddls += _ddls([s])
             except Exception:  # noqa: BLE001
-                ddls.append(None)
+                continue
     out = []
     for ddl in ddls:
-        if ddl is None:
-            continue
         try:
             dt = T._parse_datatype_string(ddl)
-            if isinstance(dt, T.StructType):
-                out.append(dt)
         except Exception:  # noqa: BLE001 — unparseable: skip
             continue
+        if isinstance(dt, T.StructType):
+            out.append(dt)
     return out
 
 
@@ -385,7 +377,7 @@ def ingest(
     filter path gets the same effect from parquet min/max pruning.
     ``pipeline_observe`` (default on) prefetches the NEXT epoch's
     envelope samples and schema inference on a second job-submission
-    thread while the current epoch's merge runs, removing ~3 driver
+    thread while the current epoch's merge runs, removing 2 driver
     round-trips of serial time per epoch; parity-tested byte-identical
     to the serial form (test_pipelined_observe_parity).
     ``epoch_offset``/``lsn_lo`` shift the epoch ids and the LSN window
@@ -443,15 +435,15 @@ def ingest(
         samples = observe_envelope_samples_pruned(batch, "value_json", "lsn")
         return infer_envelope_schemas_batch(spark, samples)
 
-    # Observation pipelining: the sample-pick/point-fetch/schema_of_json
-    # jobs for epoch k+1 are read-only on the source, so they can run on a
-    # second job-submission thread WHILE epoch k's merge occupies the
-    # cluster — 3 driver round-trips of pure serial time per epoch move off
-    # the critical path. Ordering is preserved where it matters: the
-    # prefetch only COMPUTES the inferred schemas; registry.observe still
-    # happens on this thread in epoch order, so the registry snapshot
-    # committed with epoch k reflects exactly epochs <= k (a crash/resume
-    # sees the same state as the serial form).
+    # Observation pipelining: the sample-pick/point-fetch jobs (and the
+    # job-free schema_of_json) for epoch k+1 are read-only on the source,
+    # so they can run on a second job-submission thread WHILE epoch k's
+    # merge occupies the cluster — 2 driver round-trips of pure serial
+    # time per epoch move off the critical path. Ordering is preserved
+    # where it matters: the prefetch only COMPUTES the inferred schemas;
+    # registry.observe still happens on this thread in epoch order, so
+    # the registry snapshot committed with epoch k reflects exactly
+    # epochs <= k (a crash/resume sees the same state as the serial form).
     pool = ThreadPoolExecutor(max_workers=1) if (
         pipeline_observe and parse_mode == "native" and len(todo) > 1
     ) else None
@@ -575,11 +567,9 @@ def replay_quarantine(
     if stored:
         for name, st in SchemaRegistry.from_json(stored).items():
             registry.observe(name, st)
-    for s in observe_envelope_samples(repaired, "value_json", "lsn"):
-        try:
-            registry.observe("SourceChange", infer_envelope_schema_from_sample(spark, s))
-        except Exception:  # noqa: BLE001 — still-corrupt sample: skip
-            continue
+    samples = observe_envelope_samples(repaired, "value_json", "lsn")
+    for inferred in infer_envelope_schemas_batch(spark, samples):  # skips still-corrupt
+        registry.observe("SourceChange", inferred)
     env_schema = registry.get("SourceChange")
     if env_schema is None:
         raise ValueError("no parseable envelope among repaired rows and no registry state")

@@ -47,6 +47,7 @@ from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..operators.dedup import lww_latest, lww_latest_salted
 
@@ -481,6 +482,70 @@ class BucketedMergeSink:
     def committed_epochs(self) -> set[int]:
         return {e["epoch"] for e in self._manifest["epochs"]}
 
+    # ----- table schema --------------------------------------------------
+    #
+    # The manifest records the table's columns (keys, order_col, payload;
+    # not the op marker, ``_bucket`` or lineage columns) as DDL strings in
+    # ``schemas``; ``schema_id`` names the current one and every epoch
+    # entry names its snapshot's — the Iceberg ``schemas``/``schema-id``
+    # design. Every read of committed files passes it to
+    # ``spark.read.schema`` (``_scan``) instead of inferring it from
+    # parquet footers, which costs a Spark job per read. Commits widen it
+    # on the driver from the written frame's ``.schema``; a schema is
+    # appended only when columns are added. Manifests written before
+    # schemas were recorded infer on read, and their next commit records.
+
+    def _schema_ddl(self, entry: dict) -> str | None:
+        """The recorded schema of ``entry`` — the manifest (the current
+        table) or an epoch entry (that snapshot); None when unrecorded."""
+        sid = entry.get("schema_id")
+        return None if sid is None else self._manifest["schemas"][sid]
+
+    def _data_schema(self, schema: T.StructType) -> T.StructType:
+        """The table columns of a frame's schema, nullable (as every
+        parquet read reports them)."""
+        cols = {*self.keys, self.order_col, *self._payload_cols(schema.names)}
+        return T.StructType([T.StructField(f.name, f.dataType) for f in schema if f.name in cols])
+
+    def _widen(self, ddl: str | None, schema: T.StructType) -> str:
+        """``ddl`` with the table columns of ``schema`` it lacks appended."""
+        new = self._data_schema(schema)
+        if ddl is None:
+            return new.toDDL()
+        cur = T.StructType.fromDDL(ddl)
+        added = [f for f in new if f.name not in cur.names]
+        return T.StructType(cur.fields + added).toDDL() if added else ddl
+
+    def _table_ddl(self, manifest: dict) -> str | None:
+        """``manifest``'s current schema; one it never recorded is
+        inferred from its live files (None while the table is empty)."""
+        if "schema_id" in manifest:
+            return manifest["schemas"][manifest["schema_id"]]
+        rels = list(manifest["buckets"].values()) + list(manifest.get("deltas", []))
+        return self._data_schema(self._scan(rels, None, False).schema).toDDL() if rels else None
+
+    def _record_schema(self, manifest: dict, schema: T.StructType) -> None:
+        """Make ``manifest``'s current schema its own widened by
+        ``schema``, reusing the id of an identical recorded schema."""
+        schemas = list(manifest.get("schemas", []))
+        ddl = self._widen(self._table_ddl(manifest), schema)
+        if ddl not in schemas:
+            schemas.append(ddl)
+        manifest["schemas"], manifest["schema_id"] = schemas, schemas.index(ddl)
+
+    def _scan(self, rels: list[str], schema: str | None, with_op: bool) -> DataFrame:
+        """The parquet files under ``rels`` read with a recorded table
+        schema — no footer is opened, so building the frame launches no
+        Spark job. ``with_op`` adds the op marker column delta files carry
+        (base files have none). ``schema=None`` (unrecorded) infers it
+        from the footers instead."""
+        paths = [os.path.join(self.root, r) for r in rels]
+        if schema is None:
+            return self.spark.read.option("mergeSchema", "true").parquet(*paths)
+        if with_op:
+            schema += ", `{}` STRING".format(self.op_col.replace("`", "``"))
+        return self.spark.read.schema(schema).parquet(*paths)
+
     # ----- merge ---------------------------------------------------------
 
     def _bucket_expr(self):
@@ -489,11 +554,14 @@ class BucketedMergeSink:
         )
 
     def _key_types(self) -> dict:
-        """Stored dtype of each key column, from one committed parquet
-        footer (cached). xxhash64 is TYPE-sensitive — lit(5) is an int32
-        and hashes to a different bucket than a bigint column holding 5 —
-        so point-lookup literals must be cast to the stored type before
-        bucketing."""
+        """Stored dtype of each key column, from the recorded schema (an
+        unrecorded one: one committed parquet footer, cached). xxhash64 is
+        TYPE-sensitive — lit(5) is an int32 and hashes to a different
+        bucket than a bigint column holding 5 — so point-lookup literals
+        must be cast to the stored type before bucketing."""
+        ddl = self._schema_ddl(self._manifest)
+        if ddl is not None:
+            return {f.name: f.dataType for f in T.StructType.fromDDL(ddl) if f.name in self.keys}
         cached = getattr(self, "_key_types_cache", None)
         if cached is not None:
             return cached
@@ -502,7 +570,7 @@ class BucketedMergeSink:
         )
         types: dict = {}
         if rels:
-            schema = self.spark.read.parquet(os.path.join(self.root, rels[0])).schema
+            schema = self._scan(rels[:1], None, False).schema
             types = {f.name: f.dataType for f in schema.fields if f.name in self.keys}
             self._key_types_cache = types  # only cache once data exists
         return types
@@ -537,7 +605,8 @@ class BucketedMergeSink:
             )
             lineage, touched = stats()
             return self._commit_epoch(
-                epoch, touched, lineage, meta, deltas=sorted(written.values())
+                epoch, touched, lineage, batch_b.schema, meta,
+                deltas=sorted(written.values()),
             )
         if self.prune_buckets:
             # only this tiny distinct blocks the rewrite: it picks which
@@ -552,7 +621,9 @@ class BucketedMergeSink:
             n_parts = self.num_buckets
         buckets = self._cow_rewrite(batch_b, read, rel, n_parts, self.salted_merge)
         lineage, touched = stats()
-        return self._commit_epoch(epoch, touched, lineage, meta, buckets=buckets)
+        return self._commit_epoch(
+            epoch, touched, lineage, batch_b.schema, meta, buckets=buckets
+        )
 
     def _payload_cols(self, columns: list[str]) -> list[str]:
         reserved = (self.order_col, self.op_col, "_bucket", "kafka_partition",
@@ -649,13 +720,12 @@ class BucketedMergeSink:
         sides = delta_b.select(*cols)
         live = [buckets.pop(str(b)) for b in read if str(b) in buckets]
         if live:
-            # mergeSchema + allowMissingColumns: bucket files written before
-            # a schema evolution lack the new columns; they read back as
-            # null (additive-widening contract, SURVEY.md N2 / Iceberg
-            # ADD COLUMN semantics)
+            # bucket files written before a schema evolution lack the new
+            # columns; the table schema reads them back as null
+            # (additive-widening contract, SURVEY.md N2 / Iceberg ADD
+            # COLUMN semantics)
             cur = (
-                self.spark.read.option("mergeSchema", "true")
-                .parquet(*[os.path.join(self.root, r) for r in live])
+                self._scan(live, self._schema_ddl(self._manifest), False)
                 .withColumn(self.op_col, F.lit("u"))
                 .withColumn("_bucket", self._bucket_expr())
             )
@@ -672,15 +742,17 @@ class BucketedMergeSink:
 
     def _commit_epoch(
         self, epoch: int, touched: list[int], lineage: list[dict],
-        meta: dict | None = None, buckets: dict | None = None,
-        deltas: Sequence[str] = (),
+        schema: T.StructType, meta: dict | None = None,
+        buckets: dict | None = None, deltas: Sequence[str] = (),
     ) -> dict:
-        """The one commit point of every merge and publish: append the
+        """The one commit point of every merge and publish: widen the
+        table schema by the written frame's ``schema``, append the
         epoch's snapshot entry, merge ``meta``, drop the epoch's staged
         entry, CAS the manifest, then auto-compact. ``buckets`` replaces
         the bucket map (COW); ``deltas`` join the pending deltas (MOR).
         Returns the snapshot entry."""
         manifest = dict(self._manifest)
+        self._record_schema(manifest, schema)
         if buckets is not None:
             manifest["buckets"] = buckets
         manifest["deltas"] = list(manifest.get("deltas", [])) + list(deltas)
@@ -697,6 +769,7 @@ class BucketedMergeSink:
             # a later rebucket() changes self.num_buckets, and changelog
             # bucket pruning must probe with the snapshot's own count
             "num_buckets": self.num_buckets,
+            "schema_id": manifest["schema_id"],
         }
         manifest["epochs"] = manifest["epochs"] + [entry]
         if meta:
@@ -763,26 +836,26 @@ class BucketedMergeSink:
         self,
         base_rels: list[str],
         delta_rels: list[str],
+        schema: str | None,
         pre_filter=None,
     ) -> DataFrame:
         """Base ∪ deltas -> one live row per key (MOR read path): LWW by
         ``order_col`` across base rows (implicit op='u') and delta rows
         (op kept, op='d' winners mask the key), then drop tombstones.
-        ``pre_filter`` (a Column) is applied BEFORE the LWW reduce — only
-        sound for predicates on columns immutable across a key's versions
+        ``schema`` is the recorded table schema the files are read with
+        (``_scan``). ``pre_filter`` (a Column) is applied BEFORE the LWW
+        reduce — only sound for predicates on columns immutable across a key's versions
         (the merge keys), where dropping rows cannot flip a winner; it
         exists so ``read_where`` shuffles only matching keys."""
         if not base_rels and not delta_rels:
             raise ValueError("sink is empty — no committed buckets or deltas")
-        rd = self.spark.read.option("mergeSchema", "true")
         parts = []
         if base_rels:
             parts.append(
-                rd.parquet(*[os.path.join(self.root, r) for r in base_rels])
-                .withColumn(self.op_col, F.lit("u"))
+                self._scan(base_rels, schema, False).withColumn(self.op_col, F.lit("u"))
             )
         if delta_rels:
-            parts.append(rd.parquet(*[os.path.join(self.root, r) for r in delta_rels]))
+            parts.append(self._scan(delta_rels, schema, True))
         df = parts[0]
         for p in parts[1:]:
             df = df.unionByName(p, allowMissingColumns=True)
@@ -801,6 +874,7 @@ class BucketedMergeSink:
         return self._merged_view(
             list(self._manifest["buckets"].values()),
             list(self._manifest.get("deltas", [])),
+            self._schema_ddl(self._manifest),
         )
 
     def _bucket_lookup(
@@ -817,27 +891,25 @@ class BucketedMergeSink:
         candidate pruning guards against)."""
         as_of = self._resolve_epoch(as_of)
         if as_of is None:
-            snap_buckets = self._manifest["buckets"]
-            snap_deltas = self._manifest.get("deltas", [])
+            snap = self._manifest
             snap_nb = self.num_buckets
         else:
             snap = self._snapshot(as_of)
-            snap_buckets = snap["buckets"]
-            snap_deltas = snap.get("deltas", [])
             snap_nb = int(snap.get("num_buckets", self.num_buckets))
+        snap_buckets, snap_deltas = snap["buckets"], snap.get("deltas", [])
         ktypes = self._key_types()
 
         def _klit(k, v):
             lit = F.lit(v)
             return lit.cast(ktypes[k]) if k in ktypes else lit
 
-        row = self.spark.range(1).select(
-            *[_klit(k, v).alias(k) for k, v in zip(cols, values)]
-        )
+        # the probe hashes typed literals over a driver-local one-row
+        # relation: it folds at plan time, so the collect runs no job
+        lits = {k: _klit(k, v) for k, v in zip(cols, values)}
         probe = F.pmod(
-            F.xxhash64(*[F.col(k) for k in self.bucket_cols]), F.lit(snap_nb)
+            F.xxhash64(*[lits[k] for k in self.bucket_cols]), F.lit(snap_nb)
         )
-        bucket = str(row.select(probe.alias("b")).collect()[0].b)
+        bucket = str(self.spark.sql("VALUES (1)").select(probe).collect()[0][0])
         base = snap_buckets.get(bucket)
         deltas = [
             rel for rel in snap_deltas if rel.endswith(f"_bucket={bucket}")
@@ -895,7 +967,7 @@ class BucketedMergeSink:
                     self.read_as_of(as_of) if as_of is not None else self.read()
                 )
                 return empty_src.limit(0)
-        df = self._merged_view(base_rels, delta_rels)
+        df = self._merged_view(base_rels, delta_rels, self._schema_ddl(snap))
         cond = None
         for k, v in zip(cols, values):
             eq = F.col(k) == _klit(k, v)
@@ -952,7 +1024,8 @@ class BucketedMergeSink:
         for e in self._manifest["epochs"]:
             if e["epoch"] == epoch:
                 return self._merged_view(
-                    list(e["buckets"].values()), list(e.get("deltas", []))
+                    list(e["buckets"].values()), list(e.get("deltas", [])),
+                    self._schema_ddl(e),
                 )
         raise ValueError(f"epoch {epoch} is not committed")
 
@@ -1100,6 +1173,11 @@ class BucketedMergeSink:
             "restore_of": to_epoch,
         }
         manifest = dict(self._manifest)
+        # the restored state has the snapshot's schema (an unrecorded one
+        # is inferred again, and recorded by the next commit)
+        manifest.pop("schema_id", None)
+        if "schema_id" in snap:
+            entry["schema_id"] = manifest["schema_id"] = snap["schema_id"]
         manifest["buckets"] = dict(snap["buckets"])
         manifest["deltas"] = list(snap.get("deltas", []))
         manifest["num_buckets"] = snap_nb
@@ -1178,6 +1256,7 @@ class BucketedMergeSink:
                 if d.startswith("_bucket=")
             }
         manifest = dict(self._manifest)
+        self._record_schema(manifest, current.schema)
         manifest["buckets"] = new_map
         manifest["deltas"] = []
         maint = {"op": "compact", "deltas_folded": len(deltas), "dir": rel_dir}
@@ -1433,14 +1512,22 @@ class BucketedMergeSink:
         expectations. An EMPTY staged epoch (a quiet LSN window) returns
         an empty frame with the recorded schema."""
         entry = self._staged_entry(epoch)
+        schema = self._staged_schema(entry)
         if not entry["delta_rels"]:
-            from pyspark.sql import types as T
-
-            schema = T.StructType.fromJson(json.loads(entry["schema"]))
             return self.spark.createDataFrame([], schema).drop("_bucket")
-        return self.spark.read.parquet(
-            os.path.join(self.root, f"staged/e{epoch:06d}")
-        ).drop("_bucket")
+        return self._scan(entry["delta_rels"], self._data_schema(schema).toDDL(), True)
+
+    @staticmethod
+    def _staged_schema(entry: dict) -> T.StructType:
+        """The schema of the delta frame a staged epoch wrote."""
+        return T.StructType.fromJson(json.loads(entry["schema"]))
+
+    def _candidate_schema(self, entries: list[dict]) -> str | None:
+        """The table schema widened by staged epochs' columns."""
+        ddl = self._table_ddl(self._manifest)
+        for entry in entries:
+            ddl = self._widen(ddl, self._staged_schema(entry))
+        return ddl
 
     def read_staged(self, epoch: int) -> DataFrame:
         """The CANDIDATE table state: what ``read()`` would return if the
@@ -1450,6 +1537,7 @@ class BucketedMergeSink:
         return self._merged_view(
             list(self._manifest["buckets"].values()),
             list(self._manifest.get("deltas", [])) + list(entry["delta_rels"]),
+            self._candidate_schema([entry]),
         )
 
     def audit_staged(self, epoch: int, expectations: dict) -> dict:
@@ -1581,12 +1669,12 @@ class BucketedMergeSink:
         under LWW. Valid because each staged delta is LWW-reduced and
         LWW is order-insensitive; audits run real queries here with no
         visibility side effect."""
-        rels: list[str] = []
-        for e in self._branch_epochs(name):
-            rels.extend(self._staged_entry(e)["delta_rels"])
+        entries = [self._staged_entry(e) for e in self._branch_epochs(name)]
         return self._merged_view(
             list(self._manifest["buckets"].values()),
-            list(self._manifest.get("deltas", [])) + rels,
+            list(self._manifest.get("deltas", []))
+            + [r for entry in entries for r in entry["delta_rels"]],
+            self._candidate_schema(entries),
         )
 
     def audit_branch(self, name: str, expectations: dict) -> dict:
@@ -1694,14 +1782,14 @@ class BucketedMergeSink:
             # An empty epoch (quiet LSN window) keeps the bucket map.
             touched = entry["touched"]
             buckets = self._cow_rewrite(
-                self.spark.read.parquet(staged_dir),  # _bucket from layout
+                self.read_staged_delta(epoch).withColumn("_bucket", self._bucket_expr()),
                 touched, epoch_rel, max(1, len(touched)),
             )
         if entry["has_lineage"]:
             self._write_lineage_rows(entry["lineage"], epoch)
         result = self._commit_epoch(
-            epoch, entry["touched"], entry["lineage"], entry["meta"],
-            buckets=buckets, deltas=deltas,
+            epoch, entry["touched"], entry["lineage"], self._staged_schema(entry),
+            entry["meta"], buckets=buckets, deltas=deltas,
         )
         if self.merge_mode == "cow":
             # crash before this: vacuum() collects the staged dir
@@ -2319,18 +2407,11 @@ class BucketedMergeSink:
             out = self.read().limit(0)  # every file pruned: empty, live schema
         else:
             out = self._merged_view(
-                base_files, delta_files, pre_filter=_cond(key_preds)
+                base_files, delta_files, self._schema_ddl(self._manifest),
+                pre_filter=_cond(key_preds),
             )
         other_cond = _cond(other_preds)
         return out.filter(other_cond) if other_cond is not None else out
-
-    def _snapshot_map(self, epoch: int | None) -> dict:
-        if epoch is None:
-            return {}
-        for e in self._manifest["epochs"]:
-            if e["epoch"] == epoch:
-                return dict(e["buckets"])
-        raise ValueError(f"epoch {epoch} is not committed")
 
     def read_changes(
         self,
@@ -2363,21 +2444,17 @@ class BucketedMergeSink:
         from_epoch = self._resolve_epoch(from_epoch)
         if self.merge_mode == "mor":
             return self._read_changes_mor(to_epoch, from_epoch, include_preimages)
-        fm, tm = self._snapshot_map(from_epoch), self._snapshot_map(to_epoch)
+        from_s, to_s = self._snapshot(from_epoch), self._snapshot(to_epoch)
+        fm = dict(from_s["buckets"]) if from_s else {}
+        tm = dict(to_s["buckets"])
         f_items, t_items = set(fm.items()), set(tm.items())
         old_rels = [rel for b, rel in fm.items() if (b, rel) not in t_items]
         new_rels = [rel for b, rel in tm.items() if (b, rel) not in f_items]
 
-        def _read(rels: list[str]) -> DataFrame | None:
-            if not rels:
-                return None
-            return (
-                self.spark.read.option("mergeSchema", "true")
-                .parquet(*[os.path.join(self.root, r) for r in rels])
-                .drop("_bucket")
-            )
+        def _read(rels: list[str], snap: dict | None) -> DataFrame | None:
+            return self._scan(rels, self._schema_ddl(snap), False) if rels else None
 
-        old, new = _read(old_rels), _read(new_rels)
+        old, new = _read(old_rels, from_s), _read(new_rels, to_s)
         if old is None and new is None:
             raise ValueError("snapshots are identical — no changed buckets")
         ct = "_change_type"
@@ -2447,7 +2524,7 @@ class BucketedMergeSink:
             # a compact() earlier in history folds deltas into the base,
             # so "just the delta dirs" would silently miss those rows.
             state = self._merged_view(
-                list(to_s["buckets"].values()), to_deltas
+                list(to_s["buckets"].values()), to_deltas, self._schema_ddl(to_s)
             )
             payload = [
                 c for c in state.columns
@@ -2478,10 +2555,10 @@ class BucketedMergeSink:
                 + list(to_s["buckets"].values()) + to_deltas
             )
             old_state = self._merged_view(
-                list(from_buckets.values()), from_deltas
+                list(from_buckets.values()), from_deltas, self._schema_ddl(from_s)
             )
             new_state = self._merged_view(
-                list(to_s["buckets"].values()), to_deltas
+                list(to_s["buckets"].values()), to_deltas, self._schema_ddl(to_s)
             )
             return self._classify_state_diff(
                 old_state, new_state, include_preimages
@@ -2490,9 +2567,7 @@ class BucketedMergeSink:
         if not new_rels:
             raise ValueError("snapshots are identical — no new deltas")
         self._require_rels(new_rels + list(from_buckets.values()) + from_deltas)
-        d = self.spark.read.option("mergeSchema", "true").parquet(
-            *[os.path.join(self.root, r) for r in new_rels]
-        )
+        d = self._scan(new_rels, self._schema_ddl(to_s), True)
         payload = [
             c for c in d.columns
             if c not in self.keys and c not in (self.order_col, self.op_col)
@@ -2546,7 +2621,7 @@ class BucketedMergeSink:
                     *payload,
                 )
             )
-        prior = self._merged_view(base_rels, delta_rels)
+        prior = self._merged_view(base_rels, delta_rels, self._schema_ddl(from_s))
         p = prior.select(
             *[F.col(k).alias(f"_pk_{k}") for k in self.keys],
             F.col(self.order_col).alias("_p_ord"),
@@ -2643,11 +2718,13 @@ class BucketedMergeSink:
         bucket = F.pmod(
             F.xxhash64(*[F.col(k) for k in self.bucket_cols]), F.lit(new_num_buckets)
         )
+        current = self.read()
         new_map = self._write_buckets(
-            self.read().withColumn("_bucket", bucket), rel_dir, new_num_buckets,
+            current.withColumn("_bucket", bucket), rel_dir, new_num_buckets,
             sort=False,
         )
         manifest = dict(self._manifest)
+        self._record_schema(manifest, current.schema)
         manifest["buckets"] = new_map
         manifest["num_buckets"] = new_num_buckets
         # read() above already folded any pending MOR deltas into the

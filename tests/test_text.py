@@ -118,6 +118,13 @@ def test_simhash_deterministic(spark, docs):
     assert a == b
 
 
+@pytest.mark.parametrize("bits", [0, 65])
+def test_simhash_rejects_bits_outside_1_to_64(spark, bits):
+    df = spark.createDataFrame([(1, "alpha beta")], ["doc_id", "text"])
+    with pytest.raises(ValueError, match="bits"):
+        td.simhash(df, bits=bits)
+
+
 def test_simhash_md5_token_hash_matches_hashlib(spark):
     """Portable token hash: conv(substr(md5,1,16),16,-10) must equal the
     signed int64 of the first 16 md5 hex chars (the oracle's formula)."""

@@ -37,11 +37,11 @@ def main() -> None:
         fn = qs[name]
         best_build, best_exec = None, None
         for _ in range(repeats):
-            t0 = time.time()
+            t0 = time.perf_counter()
             df = fn(spark, sf)
-            t1 = time.time()
+            t1 = time.perf_counter()
             df.write.format("noop").mode("overwrite").save()
-            t2 = time.time()
+            t2 = time.perf_counter()
             b, e = t1 - t0, t2 - t1
             if best_build is None or b < best_build:
                 best_build = b
